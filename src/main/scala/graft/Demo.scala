@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.api.TupleJob
-import graft.io.{AvroSource, GSchema, MultiSink, Tables, TextTupleSource}
+import graft.io.{AvroSource, GSchema, MultiSink, Tables}
 import graft.operators.{GameOfLife, Multimodal}
 
 /** End-to-end tour of the library surface beyond the driver contract:

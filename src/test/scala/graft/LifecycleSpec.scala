@@ -539,6 +539,20 @@ class LifecycleSpec extends GraftSuite {
     assert(e.getMessage.contains("another writer"), e.getMessage)
     assert(Layout.readTable(spark, "b_ws").where(col("k") === 1L)
       .select("n").first().getLong(0) == 2L, "the reject must precede any mutation")
+    // the ad-hoc append and the rename rebuild take the same lease: both
+    // reject before any mutation and leave the foreign lock in place
+    val ea = intercept[IllegalStateException] {
+      Layout.appendBucketed(Seq((3L, 4L)).toDF("k", "n"), "b_ws", "k", 2)
+    }
+    assert(ea.getMessage.contains("another writer"), ea.getMessage)
+    val er = intercept[IllegalStateException] {
+      Layout.renameColumn(spark, "b_ws", "n", "m")
+    }
+    assert(er.getMessage.contains("another writer"), er.getMessage)
+    assert(lock.exists(), "a rejected op must leave the foreign lease in place")
+    val untouched = Layout.readTable(spark, "b_ws")
+    assert(untouched.columns.toSeq == Seq("k", "n") && untouched.count() == 2,
+      "the rejects must precede any mutation")
     // crash recovery: age the foreign lock past the stale threshold —
     // broken, taken over, and the op completes
     assert(lock.setLastModified(System.currentTimeMillis() - Layout.leaseStaleMs - 60000L))
@@ -546,6 +560,38 @@ class LifecycleSpec extends GraftSuite {
     assert(Layout.readTable(spark, "b_ws").where(col("k") === 1L)
       .select("n").first().getLong(0) == 9L)
     assert(!lock.exists(), "a completed pass must release the lease")
+  }
+
+  test("one monitor per location: vacuum on a table's path waits for a merge inside its lease") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Layout.writeBucketed(Seq((1L, 2L), (2L, 3L)).toDF("k", "n"), "b_mon", "k", 2)
+    val loc = tableLoc("b_mon")
+    // the delta's UDF parks the merge inside its lease until released
+    val hold = udf { (k: Long) =>
+      LeaseGate.entered.countDown()
+      LeaseGate.release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      k
+    }
+    val delta = Seq((1L, 9L)).toDF("k", "n").select(hold(col("k")).as("k"), col("n"))
+    val merge = Future(Layout.mergeBucketed(spark, "b_mon", "k", 2, delta))
+    try {
+      assert(LeaseGate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the merge must reach the delta")
+      assert(new java.io.File(loc, "_writer.lock").exists(), "the merge holds the lease")
+      // the same location named as a directory path must serialize with it
+      val vac = Future(Layout.vacuum(spark, loc.toString, 0L))
+      assert(scala.util.Try(Await.ready(vac, 5.seconds)).isFailure,
+        "vacuum must not run inside another thread's merge")
+      LeaseGate.release.countDown()
+      Await.result(merge, 2.minutes)
+      Await.result(vac, 2.minutes)
+    } finally LeaseGate.release.countDown()
+    assert(!new java.io.File(loc, "_writer.lock").exists())
+    assert(Layout.readTable(spark, "b_mon").where(col("k") === 1L)
+      .select("n").first().getLong(0) == 9L)
   }
 
   test("a DataFrame instance survives reuse across layout calls (pinning must not poison the caller's plan)") {
@@ -609,4 +655,12 @@ class LifecycleSpec extends GraftSuite {
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents")))
     assert(pinned.exceptAll(raw).isEmpty && raw.exceptAll(pinned).isEmpty)
   }
+}
+
+/** Latches a UDF in [[LifecycleSpec]] blocks on — a top-level object, so
+  * the task closure references it instead of serializing it.
+  */
+private object LeaseGate {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }
